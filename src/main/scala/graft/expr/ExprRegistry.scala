@@ -59,7 +59,7 @@ object ExprRegistry {
     * two-scan shape as [[WholeFrameAgg]], zero single-partition stages. */
   final case class AggThenRow(agg: Column, row: Column => Column) extends Derived
   /** A GLOBAL ordered fn (no `partition_by`): the derive stage routes it
-    * through [[OrderedAtScale.applyGlobal]]'s range-bucketed two-level
+    * through [[OrderedAtScale.applyFusedLevel]]'s range-bucketed two-level
     * decomposition, so no config can compile to a single-partition
     * WindowExec (round-16: the last scale cliff, closed). */
   final case class GlobalOrdered(spec: OrderedAtScale.GlobalOrderedSpec) extends Derived
@@ -70,7 +70,7 @@ object ExprRegistry {
     org.apache.spark.sql.DataFrame) extends Derived
   /** A batchable GLOBAL raw-frame rolling fn (the moment/percentile
     * family): consecutive entries sharing (orderBy, desc, k) fuse into ONE
-    * [[OrderedAtScale.globalRollingFrameMulti]] decomposition — the
+    * [[OrderedAtScale.RollGroup]] of a fused level — the
     * [[GlobalOrdered]] batching rule applied to the rolling family (a
     * 6-statistic config is one range exchange, not six). */
   final case class GlobalRollingFrame(
@@ -82,7 +82,7 @@ object ExprRegistry {
       frameAgg: Column => Column) extends Derived
   /** The RANGE-framed twin of [[GlobalRollingFrame]]: consecutive entries
     * sharing (by, window, closed) fuse into ONE
-    * [[OrderedAtScale.globalRollingByMulti]] decomposition. */
+    * [[OrderedAtScale.RollByGroup]] of a fused level. */
   final case class GlobalRollingBy(
       by: String,
       window: Long,
@@ -192,7 +192,7 @@ object ExprRegistry {
 
   /** Running aggregate along an explicit order: the per-key windowed form
     * with `partition_by`; WITHOUT it, the range-bucketed two-level
-    * decomposition ([[OrderedAtScale.applyGlobal]]) — a global running fn
+    * decomposition ([[OrderedAtScale.applyFusedLevel]]) — a global running fn
     * never compiles to a single-partition window. `recombine`
     * re-aggregates bucket totals; `combine` merges a row's prior-bucket
     * prefix (null in the first bucket) with its within-bucket running
@@ -267,9 +267,8 @@ object ExprRegistry {
   /** Decomposable rolling aggregate (sum/min/max): per-key windowed with
     * `partition_by`. The global form rides the BATCHABLE raw-frame
     * decomposition ([[GlobalRollingFrame]] →
-    * [[OrderedAtScale.globalRollingFrameMulti]]) since round 19 — it used
-    * to take a dedicated one-fn-per-level tail exchange
-    * ([[OrderedAtScale.globalRolling]]), so a config with several
+    * [[OrderedAtScale.RollGroup]]) since round 19 — it used to take a
+    * dedicated one-fn-per-level tail exchange, so a config with several
     * same-(order, k) decomposable rollings paid one full decomposition
     * level EACH (q164's rolling_sum + rolling_max were two levels; now
     * one, shared also with any moment-family entries of the same frame).
@@ -305,7 +304,7 @@ object ExprRegistry {
   /** Rolling fn whose aggregate needs the RAW frame values (the moment/
     * percentile family): per-key windowed with `partition_by`; WITHOUT it,
     * the head+tail raw-value exchange
-    * ([[OrderedAtScale.globalRollingFrame]]) whose boundary rows
+    * ([[OrderedAtScale.RollGroup]]) whose boundary rows
     * re-aggregate with a [[FrameStats]] fold that is BIT-IDENTICAL to the
     * windowed aggregate — closing the last family that used to fall back
     * to a single-partition window. `windowedAgg` is the native aggregate
@@ -422,7 +421,7 @@ object ExprRegistry {
     val parts = strSeq(kw, "partition_by")
     require(parts.nonEmpty,
       s"'$fn': rollingByFrame reached with an empty partition_by — the global form MUST " +
-        "route through OrderedAtScale.globalRollingBy (value-range tail exchange), never " +
+        "route through OrderedAtScale.RollByGroup (value-range tail exchange), never " +
         "a single-partition window. This is a registry bug: add the fn's global arm.")
     val base = Window.partitionBy(parts.map(col): _*).orderBy(col(by))
     closed match {
@@ -435,7 +434,7 @@ object ExprRegistry {
 
   /** RANGE-framed rolling fn (`rolling_*_by`): per-key windowed with
     * `partition_by`; WITHOUT it, the value-range tail exchange
-    * ([[OrderedAtScale.globalRollingBy]]) — the last family that used to
+    * ([[OrderedAtScale.RollByGroup]]) — the last family that used to
     * fall back to a single-partition window. `boundary` recomputes a
     * boundary row's value from (tail values in range, own frame values,
     * within value); raw-frame re-aggregations use [[FrameStats]] folds so
@@ -698,12 +697,11 @@ object ExprRegistry {
     "is_duplicated" -> rw(kw => count(lit(1)).over(Window.partitionBy(c(kw))) > 1),
     "is_unique" -> rw(kw => count(lit(1)).over(Window.partitionBy(c(kw))) === 1),
 
-    // rolling windows (explicit order_by + window_size). The DECOMPOSABLE
-    // aggregates (sum/min/max + mean via a (sum,count) pair) take the
-    // tail-exchange decomposition in their GLOBAL form
-    // ([[OrderedAtScale.globalRolling]]); the moment/percentile family
-    // (std/var/median/quantile/skew/kurtosis) takes the raw-value
-    // head+tail exchange ([[OrderedAtScale.globalRollingFrame]]) whose
+    // rolling windows (explicit order_by + window_size). In their GLOBAL
+    // form the DECOMPOSABLE aggregates (sum/min/max + mean via a
+    // (sum,count) pair) and the moment/percentile family
+    // (std/var/median/quantile/skew/kurtosis) all take the raw-value
+    // head+tail exchange ([[OrderedAtScale.RollGroup]]) whose
     // boundary folds are BIT-IDENTICAL to the windowed aggregates
     // (FrameStats replicates CentralMomentAgg's sequential updates and
     // percentile's sorted-multiset interpolation exactly).
@@ -1438,9 +1436,10 @@ object ExprRegistry {
             throw new IllegalArgumentException(
               "interpolate_by: input frame already has internal shadow " +
                 s"column '$n' — rename it first"))
-          val staged = OrderedAtScale.applyGlobal(
-            OrderedAtScale.applyGlobal(df, "__ip_p", fillSpec(pack, ord, desc)),
-            "__ip_n", fillSpec(pack, ord, !desc))
+          def fill(d: org.apache.spark.sql.DataFrame, name: String, dsc: Boolean) =
+            OrderedAtScale.applyFusedLevel(d, ord, dsc,
+              ordSpecs = Seq(name -> fillSpec(pack, ord, dsc)))
+          val staged = fill(fill(df, "__ip_p", desc), "__ip_n", !desc)
           staged.withColumn(out, interp(
             col("__ip_p.pv"), col("__ip_p.px"),
             col("__ip_n.pv"), col("__ip_n.px")))

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Frame statistics recomputed from a RAW value array — the boundary-row
   * arithmetic behind the global (no `partition_by`) forms of the rolling
-  * moment/percentile derive fns ([[OrderedAtScale.globalRollingFrame]]).
+  * moment/percentile derive fns ([[OrderedAtScale.RollGroup]] and
+  * [[OrderedAtScale.RollByGroup]] units of [[OrderedAtScale.applyFusedLevel]]).
   *
   * Every function here replicates the corresponding Spark aggregate's
   * float arithmetic EXACTLY (verified bit-identical in

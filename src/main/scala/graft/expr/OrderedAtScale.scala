@@ -3,6 +3,7 @@ package graft.expr
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Range-bucketed two-level decomposition for GLOBAL (no `partition_by`)
   * ordered derive functions — the scale-safe replacement for
@@ -37,9 +38,8 @@ import org.apache.spark.sql.functions._
   * plus bucket-hash) instead of one shuffle into ONE task — same shuffle
   * bytes, but wall-clock drops from O(n log n) on a single core to
   * O(n/B log n/B) across the cluster, and no task ever materializes more
-  * than ~n/B rows. The bucket count `B` defaults to 4× the shuffle
-  * partition count (see [[bucketCount]]) and can be pinned via
-  * `spark.graft.orderedBuckets`.
+  * than ~n/B rows. The bucket count `B` is 4× the shuffle partition
+  * count (see [[bucketCount]]).
   *
   * Determinism: bucket BOUNDARIES come from sampling, but every output
   * value is bucket-placement-independent (prefix + within recompose the
@@ -130,19 +130,10 @@ object OrderedAtScale {
     * 3-4 buckets). B only sizes driver-adjacent metadata (the ≤ B-row
     * totals frame, the O(B²) distributed prefix re-aggregation, the
     * O(B·k) tail exports), so 4x the partition count is cheap. */
-  private def bucketCount(df: DataFrame): Int = {
-    val conf = df.sparkSession.conf
-    conf.getOption("spark.graft.orderedBuckets").map(_.toInt)
-      .getOrElse(4 * partitionCount(df))
-  }
+  private def bucketCount(df: DataFrame): Int = 4 * partitionCount(df)
 
   private def partitionCount(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-
-  private def refsOf(c: Column): Set[String] =
-    org.apache.spark.sql.graftbridge.ColumnBridge.expression(c).collect {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => u.name
-    }.toSet
 
   /** Shared round-19 bucketing preamble — ONE full-data exchange where the
     * round-16 original paid two.
@@ -200,7 +191,7 @@ object OrderedAtScale {
     // only decorrelate duplicate keys in the sample, never affect values
     val srcCols = sampleSrc.columns.toSet
     val extras = sampleExtra.filter(c =>
-      refsOf(c).forall(srcCols.contains))
+      ColumnBridge.referencedNames(c).forall(srcCols.contains))
     val sampled = sampleSrc
       .select((keyCols :+ xxhash64((keyCols ++ extras): _*).as("__go_h")): _*)
       .orderBy(col("__go_h").asc)
@@ -232,43 +223,83 @@ object OrderedAtScale {
       p, BucketCol)
   }
 
-  /** Applies `spec` to `df`, adding the result as column `outName`. */
-  def applyGlobal(df: DataFrame, outName: String, spec: GlobalOrderedSpec): DataFrame =
-    applyGlobalMulti(df, Seq(outName -> spec))
-
-  /** SEVERAL global ordered fns sharing one (orderBy, desc) in a single
-    * decomposition: one range exchange, ONE totals aggregation carrying
-    * every bucketAgg, one b² prefix join, one window — the batched form
-    * the derive stage uses for consecutive same-order entries (12 naive
-    * chained decompositions would be 12 range shuffles and ~3× optimizer
-    * cost per level; batched they are one). Round 20: a thin wrapper over
-    * [[applyFusedLevel]], which additionally fuses OTHER global families
-    * onto the same bucketized frame. */
-  def applyGlobalMulti(df: DataFrame, specs: Seq[(String, GlobalOrderedSpec)],
-      sampleFrom: Option[DataFrame] = None): DataFrame = {
-    require(specs.nonEmpty, "applyGlobalMulti needs at least one spec")
-    val ord0 = specs.head._2.orderBy
-    val desc0 = specs.head._2.desc
-    require(specs.forall(s => s._2.orderBy == ord0 && s._2.desc == desc0),
-      "applyGlobalMulti requires one shared (orderBy, desc) across the batch")
-    applyFusedLevel(df, ord0, desc0, specs, Nil, Nil, Nil, sampleFrom)
-  }
-
-  /** A batch of raw-frame rolling fns sharing (orderBy, desc, k) — one
-    * head/tail export set and ONE tie hash over the batch's distinct value
-    * exprs, exactly the batch a single [[globalRollingFrameMulti]] call
-    * carries (the tie contract `xxhash64(orderKeys, values)` is
-    * per-BATCH, so fusion must not merge batches that were separate —
-    * the derive stage groups by pool adjacency to preserve it). */
+  /** A batch of raw-frame rolling fns sharing (orderBy, desc, k) — the
+    * global ROLLING window over the last `k` rows (sum/min/max/mean and
+    * the moment/percentile family alike), decomposed as a raw-value
+    * head+tail exchange: interior rows (within-bucket row number ≥ k)
+    * take the plain within-bucket windowed aggregate; each boundary row
+    * (first k−1 of a bucket — ≤ B·(k−1) rows total) recomposes its
+    * frame's RAW values as (a slice of the prior buckets' exported
+    * (k−1)-row tails) ++ (its own bucket's first-rows slice, from a
+    * (k−1)-row head export) and re-aggregates with `frameAgg` — which
+    * [[FrameStats]] makes BIT-IDENTICAL to the windowed aggregate (same
+    * sequential central-moment updates in frame order / same
+    * sorted-multiset interpolation), so the recomposition has NO
+    * float-profile cost. Per-bucket exported state is O(k) structs, never
+    * a whole-bucket collect; the exports join only the ≤ B·(k−1)-row
+    * boundary branch (interior rows never carry an array). Each part is
+    * (outName, x, rollingAgg, frameAgg).
+    *
+    * Batching: one head/tail export set carries every part's value as a
+    * struct field, and ONE tie hash covers the batch's distinct value
+    * exprs (the tie contract `xxhash64(orderKeys, values)` is per-BATCH,
+    * so fusion must not merge batches that were separate — the derive
+    * stage groups by pool adjacency to preserve it). N separate chained
+    * decompositions would be N exchanges and ~3×-per-level optimizer cost.
+    *
+    * A non-unique `orderBy` is safe (round-17 advisory fix): the
+    * internal [[TieCol]] hash extends it to a consistent total order
+    * used by BOTH the within-bucket windows and the head/tail struct
+    * sorts, so the recomposed frame is THE windowed frame by
+    * construction. CONTRACT CAVEAT (round 17 advice): that safety
+    * argument leans on value-neutrality — [[TieCol]] hashes only
+    * (orderKeys, value expr), so rows tied on key AND value order
+    * arbitrarily-but-consistently, which is invisible to the shipped
+    * commutative / value-symmetric `frameAgg`s ([[FrameStats]] moments,
+    * sorted-multiset quantiles). A future NON-symmetric frame
+    * aggregator (e.g. "first raw value", positional indexing into the
+    * frame) would silently inherit that arbitrary tie order — such a
+    * caller must supply a genuinely unique `orderBy` instead of relying
+    * on the hash extension. */
   final case class RollGroup(
       orderBy: Seq[String],
       desc: Boolean,
       k: Int,
       parts: Seq[(String, Column, WindowSpec => Column, Column => Column)])
 
-  /** A batch of range-framed rolling fns sharing (by, window, closed) —
-    * one value-range tail export (no tie: range frames are deterministic
-    * under tied `by` values). */
+  /** A batch of RANGE-framed rolling fns sharing (by, window, closed) —
+    * the `rolling_*_by` family with no `partition_by`, decomposed as a
+    * value-range tail exchange: rows are range-bucketed by the integer
+    * `by` axis; each bucket exports only the rows inside the last
+    * `window`-length slice of its `by` range (so a later bucket can
+    * rebuild frames that reach back across the boundary), and BOUNDARY
+    * rows (frame lower bound below the bucket's min `by`) recompose their
+    * frame as (prior-tail elements inside the row's range) ++ (the
+    * within-bucket part). Interior rows take the plain within-bucket
+    * RANGE window. No tie hash: range frames are deterministic under tied
+    * `by` values. Each part is (outName, x, rangeAgg, own, boundaryValue):
+    *   - `rangeAgg`: native aggregate over the within-bucket range frame
+    *     (evaluated for ALL rows, pre-branch);
+    *   - `own`: boundary-branch own-frame mode ([[OwnFrame]]);
+    *   - `boundaryValue`: (tailXsInRange, ownValue, withinValue) →
+    *     boundary output; `ownValue` is the OwnState state / the OwnRaw
+    *     array / null under NoOwn.
+    *
+    * Unlike the row-count frames, the export size is DATA-DEPENDENT (how
+    * many rows fall in a `window`-length slice) — a dense axis or a huge
+    * `window` can make it explode, so the export and the per-bucket merged
+    * prefix both carry a loud `maxTailRows` valve (raise_error, never a
+    * silent drop). Bit-identity: `boundaryValue` implementations fold raw
+    * values in frame order ([[FrameStats]]), so recomposed rows match the
+    * windowed form exactly; with TIED `by` values the tie order inside a
+    * frame is engine-arbitrary for the windowed form too, so double-typed
+    * moment recompositions can differ in the last ulp (documented).
+    *
+    * Frame-containment note: a boundary row's own-bucket frame members are
+    * themselves boundary rows (s_by ≤ hi(t) ⇒ lo(s) ≤ hi(t)+loOff ≤
+    * t_by+loOff < bucketMin), so the boundary branch may filter FIRST and
+    * then run its own windows — interior rows never pay the raw-value
+    * collects. */
   final case class RollByGroup(
       by: String,
       window: Long,
@@ -277,8 +308,36 @@ object OrderedAtScale {
         (Column, Column, Column) => Column)],
       maxTailRows: Int = 1 << 20)
 
-  /** One global run-id assignment (`rle_id`'s per-bucket runs + driver
-    * chain-merge), fusable onto a shared bucketized frame. */
+  /** A [[RollByGroup]] boundary row's own-frame mode. Memory contract (the
+    * x100 ladder found the violation): a boundary row's OWN-frame
+    * contribution must never materialize the raw frame as a per-row array
+    * when the aggregate decomposes — on a dense `by` axis (many rows per
+    * unit) per-row arrays are O(density²) bytes through the sink and
+    * OOM'd the x100 rehearsal. Hence three modes: [[NoOwn]] (the native
+    * `within` value carries the own part — sum/min/max), [[OwnState]] (a
+    * constant-memory state window computed on the boundary branch —
+    * mean's (sum, count), the moments' Chan (n, mean, M2)), and [[OwnRaw]]
+    * (a raw collect_list — percentiles only, where no decomposition
+    * exists — guarded by the SAME loud `maxTailRows` valve on the frame
+    * row count). */
+  sealed trait OwnFrame
+  case object NoOwn extends OwnFrame
+  final case class OwnState(f: WindowSpec => Column) extends OwnFrame
+  case object OwnRaw extends OwnFrame
+
+  /** One global run-id assignment — the frame-level primitive under the
+    * no-`partition_by` forms of `rle`/`rle_id`/`unique_counts`: adds
+    * `outName` = 0-based GLOBAL run index along `orderBy`, where a run is a
+    * maximal stretch of consecutive null-safe-equal `valueCol` values.
+    *
+    * Runs can span bucket boundaries, so per-bucket run ids need a
+    * chain-merge: per bucket, one hash-agg row carries (first key+value,
+    * last key+value, run count); the ≤ B rows are collected to the driver
+    * (bounded by `maxBuckets`, loud — the `budgetSelect` house rule) and
+    * prefix-chained into per-bucket offsets, decrementing once for every
+    * boundary where the previous non-empty bucket's LAST value
+    * null-safe-equals this bucket's FIRST value (the two half-runs are one
+    * global run). The offsets broadcast back as a tiny join. */
   final case class RunIdUnit(
       valueCol: String,
       orderBy: Seq[String],
@@ -314,26 +373,37 @@ object OrderedAtScale {
     * run-ids, then ordered combines, then the rolling branch split. The
     * single interior/boundary union is shared by every rolling group
     * (per-group `when(boundary_g, recomposed).otherwise(within_g)`),
-    * where unfused levels paid one union each. */
+    * where unfused levels paid one union each.
+    *
+    * Each call site names only its own families; the unit lists default
+    * to empty, but at least one unit must be given. */
   def applyFusedLevel(
       df: DataFrame,
       bucketBy: Seq[String],
       desc: Boolean,
-      ordSpecs: Seq[(String, GlobalOrderedSpec)],
-      rollGroups: Seq[RollGroup],
-      rollByGroups: Seq[RollByGroup],
-      runIds: Seq[RunIdUnit],
+      ordSpecs: Seq[(String, GlobalOrderedSpec)] = Nil,
+      rollGroups: Seq[RollGroup] = Nil,
+      rollByGroups: Seq[RollByGroup] = Nil,
+      runIds: Seq[RunIdUnit] = Nil,
       sampleFrom: Option[DataFrame] = None): DataFrame = {
-    require(bucketBy.nonEmpty, "applyFusedLevel needs a non-empty bucket key")
+    require(bucketBy.nonEmpty, "applyFusedLevel needs a non-empty bucket key (an explicit order)")
     require(ordSpecs.nonEmpty || rollGroups.nonEmpty || rollByGroups.nonEmpty ||
       runIds.nonEmpty, "applyFusedLevel needs at least one unit")
     def ext(k: Seq[String]): Boolean = k.startsWith(bucketBy)
     require(ordSpecs.forall(s => ext(s._2.orderBy) && s._2.desc == desc),
       "applyFusedLevel: every GlobalOrderedSpec's (orderBy, desc) must extend the bucket key")
-    require(rollGroups.forall(g => ext(g.orderBy) && g.desc == desc && g.k >= 2),
-      "applyFusedLevel: every RollGroup must extend the bucket key (k >= 2)")
-    require(rollByGroups.forall(g => Seq(g.by) == bucketBy && !desc && g.window > 0),
-      "applyFusedLevel: a RollByGroup requires bucketBy == Seq(by), asc order, window > 0")
+    rollGroups.foreach { g =>
+      require(g.parts.nonEmpty, "RollGroup needs at least one part")
+      require(g.k >= 2, s"RollGroup window_size must be >= 2, got ${g.k} (1 is the row itself)")
+      require(ext(g.orderBy) && g.desc == desc,
+        "applyFusedLevel: every RollGroup must extend the bucket key")
+    }
+    rollByGroups.foreach { g =>
+      require(g.parts.nonEmpty, "RollByGroup needs at least one part")
+      require(g.window > 0, s"RollByGroup window must be positive, got ${g.window}")
+      require(Seq(g.by) == bucketBy && !desc,
+        "applyFusedLevel: a RollByGroup requires bucketBy == Seq(by) and asc order")
+    }
     require(runIds.forall(u => ext(u.orderBy) && u.desc == desc),
       "applyFusedLevel: every RunIdUnit must extend the bucket key")
     df.columns.find(_.startsWith("__go_")).foreach(n =>
@@ -343,11 +413,12 @@ object OrderedAtScale {
     val p = partitionCount(df)
     val b = bucketCount(df)
     // duplicate-key decorrelation for the cut sample (round-19 advisory
-    // fix: applyGlobalMulti used to pass Nil, so a heavy-multiplicity key
-    // whose single hash ranked low could fill the whole TakeOrdered
-    // sample and collapse the cuts): every unit's value inputs join the
-    // sample hash — they steer balance only, never values
-    val ordExtraNames = (ordSpecs.flatMap(s => refsOf(s._2.bucketAgg) -- s._2.orderBy) ++
+    // fix: with no extras, a heavy-multiplicity key whose single hash
+    // ranked low could fill the whole TakeOrdered sample and collapse the
+    // cuts): every unit's value inputs join the sample hash — they steer
+    // balance only, never values
+    val ordExtraNames = (ordSpecs.flatMap(s =>
+      ColumnBridge.referencedNames(s._2.bucketAgg) -- s._2.orderBy) ++
       runIds.map(_.valueCol)).distinct
     val extras: Seq[Column] = ordExtraNames.map(col) ++
       rollGroups.flatMap(_.parts.map(_._2)) ++ rollByGroups.flatMap(_.parts.map(_._2))
@@ -359,7 +430,7 @@ object OrderedAtScale {
     // the other families' windows) -----------------------------------------
     if (runIds.nonEmpty) {
       runIds.foreach(u => require(b <= u.maxBuckets,
-        s"globalRunIds bucket count $b > ${u.maxBuckets} — the driver chain-merge collects " +
+        s"RunIdUnit bucket count $b > ${u.maxBuckets} — the driver chain-merge collects " +
           "one row per bucket; raise maxBuckets deliberately"))
       val ridCols = runIds.indices.map(i => s"__go_rid_$i")
       val staged = runIds.zipWithIndex.foldLeft(bucketed0) { case (acc, (u, i)) =>
@@ -525,7 +596,7 @@ object OrderedAtScale {
           case "left" => (-g.window, -1L)
           case "none" => (-(g.window - 1), -1L)
           case other => throw new IllegalArgumentException(
-            s"globalRollingBy closed='$other' not in right/both/left/none")
+            s"RollByGroup closed='$other' not in right/both/left/none")
         }
         val loOff: Long = offs._1
         val hiOff: Long = offs._2
@@ -541,7 +612,7 @@ object OrderedAtScale {
           frame.filter(
             when(size(col(arr)) > g.maxTailRows,
               raise_error(concat(
-                lit(s"globalRollingBy: $what exceeds maxTailRows=${g.maxTailRows} (got "),
+                lit(s"rolling_*_by: $what exceeds maxTailRows=${g.maxTailRows} (got "),
                 size(col(arr)).cast("string"),
                 lit(s") — the '${g.by}' axis is too dense for window=${g.window}; raise " +
                   "maxTailRows deliberately or shrink the window"))).cast("boolean"))
@@ -663,7 +734,7 @@ object OrderedAtScale {
               .filter(
                 when(isB && size(col(m.ownCs(pi))) > m.g.maxTailRows,
                   raise_error(concat(
-                    lit(s"globalRollingBy: a boundary row's own frame exceeds " +
+                    lit(s"rolling_*_by: a boundary row's own frame exceeds " +
                       s"maxTailRows=${m.g.maxTailRows} (got "),
                     size(col(m.ownCs(pi))).cast("string"),
                     lit(s") — the '${m.g.by}' axis is too dense for an exact rolling " +
@@ -696,7 +767,7 @@ object OrderedAtScale {
     * tails instead. Each bucket exports only its LAST `n` rows (filtered
     * by a reversed within-bucket row_number — per-bucket state is O(n),
     * never a whole-bucket collect), the ≤ B·n tail rows recombine through
-    * the same broadcast prior-bucket join as [[applyGlobal]], and the
+    * the same broadcast prior-bucket join as [[applyFusedLevel]], and the
     * boundary read is one `element_at` on the ≤ n-element prefix array.
     * A non-unique `order_by` is safe: the internal [[TieCol]] hash
     * extends it to a consistent total order shared by the windows and
@@ -763,174 +834,5 @@ object OrderedAtScale {
       .join(broadcast(prefixTails), Seq(BucketCol), "left")
       .withColumn(outName, post(shifted))
       .drop(BucketCol, TieCol, "__go_lg", "__go_rn", "__go_rne", PrefixCol)
-  }
-
-
-  /** Global ROLLING window over the last `k` rows for a NON-decomposable
-    * aggregate (the moment/percentile family) — the raw-value head+tail
-    * exchange: interior rows (within-bucket row number ≥ k) take the plain
-    * within-bucket windowed aggregate; each boundary row (first k−1 of a
-    * bucket — ≤ B·(k−1) rows total) recomposes its frame's RAW values as
-    * (a slice of the prior buckets' exported (k−1)-row tails) ++ (its own
-    * bucket's first-rows slice, from a (k−1)-row head export) and
-    * re-aggregates with `frameAgg` — which [[FrameStats]] makes
-    * BIT-IDENTICAL to the windowed aggregate (same sequential
-    * central-moment updates in frame order / same sorted-multiset
-    * interpolation), so the recomposition has NO float-profile cost.
-    * Per-bucket exported state is O(k) structs, never a whole-bucket
-    * collect; the exports join only the ≤ B·(k−1)-row boundary branch
-    * (interior rows never carry an array), and the two branches reunite
-    * with `unionByName` off one frozen range exchange.
-    *
-    * A non-unique `orderBy` is safe (round-17 advisory fix): the
-    * internal [[TieCol]] hash extends it to a consistent total order
-    * used by BOTH the within-bucket windows and the head/tail struct
-    * sorts, so the recomposed frame is THE windowed frame by
-    * construction. CONTRACT CAVEAT (round 17 advice): that safety
-    * argument leans on value-neutrality — [[TieCol]] hashes only
-    * (orderKeys, value expr), so rows tied on key AND value order
-    * arbitrarily-but-consistently, which is invisible to the shipped
-    * commutative / value-symmetric `frameAgg`s ([[FrameStats]] moments,
-    * sorted-multiset quantiles). A future NON-symmetric frame
-    * aggregator (e.g. "first raw value", positional indexing into the
-    * frame) would silently inherit that arbitrary tie order — such a
-    * caller must supply a genuinely unique `orderBy` instead of relying
-    * on the hash extension. */
-  def globalRollingFrame(
-      df: DataFrame,
-      outName: String,
-      x: Column,
-      orderBy: Seq[String],
-      desc: Boolean,
-      k: Int,
-      rollingAgg: WindowSpec => Column,
-      frameAgg: Column => Column): DataFrame =
-    globalRollingFrameMulti(df, orderBy, desc, k, Seq((outName, x, rollingAgg, frameAgg)))
-
-  /** SEVERAL raw-frame rolling fns sharing one (orderBy, desc, k) in a
-    * single decomposition — one range exchange, one window set, one
-    * head/tail export carrying every part's value as a struct field, one
-    * boundary branch (the [[applyGlobalMulti]] batching argument: N naive
-    * chained decompositions are N range shuffles and ~3×-per-level
-    * optimizer cost; batched they are one). Each part is
-    * (outName, x, rollingAgg, frameAgg). */
-  def globalRollingFrameMulti(
-      df: DataFrame,
-      orderBy: Seq[String],
-      desc: Boolean,
-      k: Int,
-      parts: Seq[(String, Column, WindowSpec => Column, Column => Column)],
-      sampleFrom: Option[DataFrame] = None): DataFrame = {
-    require(parts.nonEmpty, "globalRollingFrameMulti needs at least one part")
-    require(k >= 2, s"globalRollingFrame window_size must be >= 2, got $k (1 is the row itself)")
-    applyFusedLevel(df, orderBy, desc, Nil,
-      Seq(RollGroup(orderBy, desc, k, parts)), Nil, Nil, sampleFrom)
-  }
-
-  /** Global RANGE-framed rolling window (the `rolling_*_by` family with no
-    * `partition_by`) — the value-range tail exchange: rows are
-    * range-bucketed by the integer `by` axis; each bucket exports only the
-    * rows inside the last `window`-length slice of its `by` range (so a
-    * later bucket can rebuild frames that reach back across the boundary),
-    * and BOUNDARY rows (frame lower bound below the bucket's min `by`)
-    * recompose their frame as (prior-tail elements inside the row's range)
-    * ++ (the within-bucket part). Interior rows take the plain
-    * within-bucket RANGE window.
-    *
-    * Unlike the row-count frames, the export size is DATA-DEPENDENT (how
-    * many rows fall in a `window`-length slice) — a dense axis or a huge
-    * `window` can make it explode, so the export and the per-bucket merged
-    * prefix both carry a loud `maxTailRows` valve (raise_error, never a
-    * silent drop). Bit-identity: `boundaryValue` implementations fold raw
-    * values in frame order ([[FrameStats]]), so recomposed rows match the
-    * windowed form exactly; with TIED `by` values the tie order inside a
-    * frame is engine-arbitrary for the windowed form too, so double-typed
-    * moment recompositions can differ in the last ulp (documented).
-    *
-    * Frame-containment note: a boundary row's own-bucket frame members are
-    * themselves boundary rows (s_by ≤ hi(t) ⇒ lo(s) ≤ hi(t)+loOff ≤
-    * t_by+loOff < bucketMin), so the boundary branch may filter FIRST and
-    * then run its own windows — interior rows never pay the raw-value
-    * collects.
-    *
-    * Memory contract (the x100 ladder found the violation): a boundary
-    * row's OWN-frame contribution must never materialize the raw frame as
-    * a per-row array when the aggregate decomposes — on a dense `by` axis
-    * (many rows per unit) per-row arrays are O(density²) bytes through
-    * the sink and OOM'd the x100 rehearsal. `own` therefore has three
-    * modes: [[NoOwn]] (the native `within` value carries the own part —
-    * sum/min/max), [[OwnState]] (a constant-memory state window computed
-    * on the boundary branch — mean's (sum, count), the moments' Chan
-    * (n, mean, M2)), and [[OwnRaw]] (a raw collect_list — percentiles
-    * only, where no decomposition exists — guarded by the SAME loud
-    * `maxTailRows` valve on the frame row count).
-    *
-    * @param rangeAgg      native aggregate over the within-bucket range
-    *                      frame (evaluated for ALL rows, pre-branch)
-    * @param own           boundary-branch own-frame mode (above)
-    * @param boundaryValue (tailXsInRange, ownValue, withinValue) →
-    *                      boundary output; `ownValue` is the OwnState
-    *                      state / the OwnRaw array / null under NoOwn */
-  sealed trait OwnFrame
-  case object NoOwn extends OwnFrame
-  final case class OwnState(f: WindowSpec => Column) extends OwnFrame
-  case object OwnRaw extends OwnFrame
-
-  def globalRollingBy(
-      df: DataFrame,
-      outName: String,
-      x: Column,
-      by: String,
-      window: Long,
-      closed: String,
-      rangeAgg: WindowSpec => Column,
-      own: OwnFrame,
-      boundaryValue: (Column, Column, Column) => Column,
-      maxTailRows: Int = 1 << 20): DataFrame =
-    globalRollingByMulti(df, by, window, closed,
-      Seq((outName, x, rangeAgg, own, boundaryValue)), maxTailRows)
-
-  /** SEVERAL range-framed rolling fns sharing one (by, window, closed) in
-    * a single decomposition — one range exchange, one bounds/tail export
-    * carrying every part's value as a struct field, one boundary branch.
-    * Each part is (outName, x, rangeAgg, own, boundaryValue). */
-  def globalRollingByMulti(
-      df: DataFrame,
-      by: String,
-      window: Long,
-      closed: String,
-      parts: Seq[(String, Column, WindowSpec => Column,
-        OwnFrame, (Column, Column, Column) => Column)],
-      maxTailRows: Int = 1 << 20,
-      sampleFrom: Option[DataFrame] = None): DataFrame = {
-    require(parts.nonEmpty, "globalRollingByMulti needs at least one part")
-    require(window > 0, s"globalRollingBy window must be positive, got $window")
-    applyFusedLevel(df, Seq(by), desc = false, Nil, Nil,
-      Seq(RollByGroup(by, window, closed, parts, maxTailRows)), Nil, sampleFrom)
-  }
-
-  /** Global run-id assignment — the frame-level primitive under the
-    * no-`partition_by` forms of `rle`/`rle_id`/`unique_counts`: adds
-    * `outName` = 0-based GLOBAL run index along `orderBy`, where a run is a
-    * maximal stretch of consecutive null-safe-equal `valueCol` values.
-    *
-    * Runs can span bucket boundaries, so per-bucket run ids need a
-    * chain-merge: per bucket, one hash-agg row carries (first key+value,
-    * last key+value, run count); the ≤ B rows are collected to the driver
-    * (bounded, loud — the `budgetSelect` house rule) and prefix-chained
-    * into per-bucket offsets, decrementing once for every boundary where
-    * the previous non-empty bucket's LAST value null-safe-equals this
-    * bucket's FIRST value (the two half-runs are one global run). The
-    * offsets broadcast back as a tiny join. */
-  def globalRunIds(
-      df: DataFrame,
-      valueCol: String,
-      orderBy: Seq[String],
-      outName: String,
-      desc: Boolean = false,
-      maxBuckets: Int = 100000): DataFrame = {
-    require(orderBy.nonEmpty, "globalRunIds requires an explicit order")
-    applyFusedLevel(df, orderBy, desc, Nil, Nil, Nil,
-      Seq(RunIdUnit(valueCol, orderBy, desc, outName, maxBuckets)))
   }
 }

@@ -428,12 +428,10 @@ object Curation {
       labelCol: String,
       featureCols: Seq[String],
       iters: Int = 30,
-      lr: Double = 1.0,
-      tol: Double = 0.0
+      lr: Double = 1.0
   ): LogisticModel = {
     require(featureCols.nonEmpty, "at least one feature column required")
     require(iters > 0 && lr > 0, s"iters/lr must be positive, got $iters/$lr")
-    require(tol >= 0.0, s"tol must be >= 0, got $tol")
     val exactSum = graft.sparkext.DoubleToScaled.exactSum(_: Column, 6)
     // iters+2 jobs scan this frame — persist for the fit, release after
     val clean = df.filter(col(labelCol).isNotNull &&
@@ -459,16 +457,7 @@ object Curation {
     val z = featureCols.indices.map(i =>
       (col(featureCols(i)).cast("double") - means(i)) / stds(i))
     var w = Vector.fill(featureCols.size + 1)(0.0)
-    // early-exit knob (round 19, judge item 6 — each GD step is one full
-    // agg job + driver barrier; at cluster scale the step count IS the
-    // latency): stop once every weight update's magnitude falls below
-    // `tol`. The default 0.0 keeps the exact legacy schedule (updates
-    // are never strictly < 0), so existing oracle fits are bit-identical;
-    // a non-zero tol is deterministic too — the gradient rides exact
-    // decimal sums, so the exit step is partition-independent.
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
+    for (_ <- 0 until iters) {
       val margin = z.zipWithIndex.foldLeft(lit(w(0))) { case (acc, (zi, i)) =>
         acc + zi * w(i + 1)
       }
@@ -477,10 +466,7 @@ object Curation {
         exactSum(err).as("g0"),
         z.zipWithIndex.map { case (zi, i) => exactSum(err * zi).as(s"g${i + 1}") }: _*
       ).head()
-      val steps = w.indices.map(i => lr * g.getDouble(i) / n)
-      w = w.indices.map(i => w(i) + steps(i)).toVector
-      converged = steps.forall(s => math.abs(s) < tol)
-      it += 1
+      w = w.indices.map(i => w(i) + lr * g.getDouble(i) / n).toVector
     }
     clean.unpersist()
     LogisticModel(featureCols, means, stds, w)

@@ -391,35 +391,14 @@ object Dedup {
     *   store without limit. Only the FINAL labels' checkpoint survives (the
     *   returned frame reads from it); it lives under `checkpointDir`, which
     *   the caller owns and can remove once done with the result. */
-  /** @param hops extra pointer jumps folded into EACH round (round 18,
-    *   judge item 7): every driver round costs two fixed actions (the
-    *   snapshot job + the changed-count job) regardless of data size, so
-    *   on DIAMETER-stressed graphs — long chains, not the shallow
-    *   near-dup stars q77/q88 produce — the driver round-trip dominates.
-    *   Each extra hop adds one more label→label self-join inside the
-    *   same job (intermediates persisted, so the doubled plan reference
-    *   is computed once), multiplying propagation distance per round:
-    *   rounds fall from ~log2(diameter) to ~log(2·2^hops)… at the cost
-    *   of one join + one persist per hop per round. Measured on the
-    *   chain ladder (BASELINE.md round 18): hops=2 cuts rounds 19→11 on
-    *   the 500k chain but wall time only 33.3→31.4 s at x100 — and is
-    *   SLOWER at x1/x10 — because local[32] per-round fixed cost is
-    *   small next to the extra join work. The default therefore stays 1.
-    *   The knob earns its keep where each round pays real scheduler +
-    *   network latency (a 1000-executor cluster's driver barrier is
-    *   10-100× this box's) AND the graph is genuinely deep; shallow
-    *   near-dup stars (q77/q88, ~3 rounds) never feel it. Labels are
-    *   identical for any hops value (propagation speed, not semantics —
-    *   q77/q88 stay oracle-green either way). */
   def connectedComponents(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       maxIters: Int = 20,
-      checkpointDir: Option[String] = None,
-      hops: Int = 1
+      checkpointDir: Option[String] = None
   ): DataFrame =
-    connectedComponentsStats(edges, srcCol, dstCol, maxIters, checkpointDir, hops)._1
+    connectedComponentsStats(edges, srcCol, dstCol, maxIters, checkpointDir)._1
 
   /** [[connectedComponents]] plus the DRIVER ROUND COUNT it took to
     * converge — the observable the round-latency ladder measures. */
@@ -428,10 +407,8 @@ object Dedup {
       srcCol: String,
       dstCol: String,
       maxIters: Int = 20,
-      checkpointDir: Option[String] = None,
-      hops: Int = 1
+      checkpointDir: Option[String] = None
   ): (DataFrame, Int) = {
-    require(hops >= 1, s"hops must be >= 1, got $hops")
     import org.apache.spark.storage.StorageLevel
     val sc = edges.sparkSession.sparkContext
     val prevCheckpointDir = sc.getCheckpointDir
@@ -480,27 +457,14 @@ object Dedup {
       // node id, so one extra self-join doubles the propagation distance
       // per round — O(log diameter) rounds instead of O(diameter), which
       // is what bounds the driver loop (each round is a full Spark job).
-      // `hops` folds further jumps into the SAME job; each hop's input is
-      // persisted so its doubled plan reference computes once (without
-      // it the plan would reference minNeighbor 2^hops times).
-      var cur = minNeighbor
-      val hopCaches = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.DataFrame]
-      var h = 0
-      while (h < hops) {
-        if (h > 0) { cur = cur.persist(StorageLevel.MEMORY_AND_DISK); hopCaches += cur }
-        val jumped = cur.as("x")
-          .join(cur.select(col("node").as("label"), col("label").as("jumped")),
-            Seq("label"))
-          .select(col("node"), col("jumped").as("label"))
-        cur = jumped
-        h += 1
-      }
-      val (next, nextRdd) = snapshot(cur)
-      hopCaches.foreach(_.unpersist(blocking = false))
+      val jumped = minNeighbor.as("x")
+        .join(minNeighbor.select(col("node").as("label"), col("label").as("jumped")),
+          Seq("label"))
+        .select(col("node"), col("jumped").as("label"))
+      val (next, nextRdd) = snapshot(jumped)
       // Round-19 negative result, measured so it stays un-retried:
       // carrying each node's previous label THROUGH the round (union
-      // branch + hop self-joins + checkpoint) to replace this join with a
+      // branch + pointer-jump self-join + checkpoint) to replace this join with a
       // plain filter over the snapshot read 10-19% SLOWER on q77/q123/
       // q124 at sf0.1 — the extra column rides every corpus-of-nodes row
       // through the round's heaviest operators to save one tiny-graph

@@ -26,13 +26,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Typed metadata carried alongside every binary payload. */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("media_type", StringType),
-    StructField("n_bytes", LongType),
-    StructField("content_md5", StringType)
-  ))
-
   /** Wrap a binary column with its metadata struct — the canonical
     * multimodal ingestion shape: (id, content: binary, meta: struct). */
   def attachMeta(df: DataFrame, contentCol: String, mediaType: String): DataFrame =

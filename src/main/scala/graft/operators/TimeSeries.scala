@@ -40,30 +40,6 @@ object TimeSeries {
       outCol: String = "ewm_mean"
   ): DataFrame = ewmStats(df, keyCol, ordCols, valCol, alpha, Seq(outCol -> EwmMean))
 
-  /** Exponentially-weighted moving variance per key (polars `ewm_var`,
-    * `adjust=true, bias=false`): the weighted variance over the same
-    * (1-α)^(i-j) weights as [[ewmMean]], debiased by S1²/(S1²−S2) where
-    * S1 = Σw and S2 = Σw². Null for a key's first non-null observation
-    * (debias denominator is exactly zero — pandas/polars NaN twin). */
-  def ewmVar(
-      df: DataFrame,
-      keyCol: String,
-      ordCols: Seq[String],
-      valCol: String,
-      alpha: Double,
-      outCol: String = "ewm_var"
-  ): DataFrame = ewmStats(df, keyCol, ordCols, valCol, alpha, Seq(outCol -> EwmVar))
-
-  /** Exponentially-weighted moving standard deviation (sqrt of [[ewmVar]]). */
-  def ewmStd(
-      df: DataFrame,
-      keyCol: String,
-      ordCols: Seq[String],
-      valCol: String,
-      alpha: Double,
-      outCol: String = "ewm_std"
-  ): DataFrame = ewmStats(df, keyCol, ordCols, valCol, alpha, Seq(outCol -> EwmStd))
-
   /** Exponentially-weighted mean over IRREGULAR time (polars
     * `ewm_mean_by` — the UNADJUSTED recurrence polars uses, which differs
     * from pandas' `ewm(times=…, adjust=True)`): decay follows the actual

@@ -704,16 +704,15 @@ object BuiltinTransformations {
       accuracy = intKw("quality_quantile_gate", kw, "accuracy", 10000))
 
   /** `bpe_tokenize(text_col, num_merges=200, out_col=bpe_tokens,
-    * mode=count|segments, trainer=local|distributed)` — train a BPE
-    * merge table ON THE INPUT frame and append the subword count or the
-    * segmented subwords. Fitting is deterministic (exact counts, fixed
-    * tie-break), so the output is a pure function of the frame — the
-    * quality_classifier train-then-apply shape. The default `local`
-    * trainer ([[Bpe.trainFromCorpusLocal]]: one corpus scan to the
-    * vocab, driver-side incremental merge loop) is BIT-IDENTICAL to
-    * `distributed` ([[Bpe.trainFromCorpus]]: one Spark job per merge)
-    * and 13.6x faster at 64 merges (BpeProbe) — a 200-merge default on
-    * the distributed form is 200 sequential jobs. */
+    * mode=count|segments)` — train a BPE merge table ON THE INPUT frame
+    * and append the subword count or the segmented subwords. Fitting is
+    * deterministic (exact counts, fixed tie-break), so the output is a
+    * pure function of the frame — the quality_classifier train-then-apply
+    * shape. Training is [[Bpe.trainFromCorpusLocal]] (one corpus scan to
+    * the vocab, driver-side incremental merge loop): BIT-IDENTICAL to the
+    * one-job-per-merge [[Bpe.trainFromCorpus]] and 13.6x faster at 64
+    * merges (BASELINE.md, "Round-14 second half: q135-q141 + the KNN-graph
+    * ladder"). */
   private def bpeTokenize: CustomFn = (df, kw) => {
     val name = "bpe_tokenize"
     val textCol = reqStr(name, kw, "text_col")
@@ -729,12 +728,7 @@ object BuiltinTransformations {
       case other => throw new IllegalArgumentException(
         s"$name: level must be 'char' or 'byte', got '$other'")
     }
-    val merges = strKw(name, kw, "trainer", "local") match {
-      case "local"       => Bpe.trainFromCorpusLocal(df, textCol, nMerges, byteLevel = byteLevel)
-      case "distributed" => Bpe.trainFromCorpus(df, textCol, nMerges, byteLevel = byteLevel)
-      case other => throw new IllegalArgumentException(
-        s"$name: trainer must be 'local' or 'distributed', got '$other'")
-    }
+    val merges = Bpe.trainFromCorpusLocal(df, textCol, nMerges, byteLevel = byteLevel)
     val pairs = merges.map(m => (m._1, m._2))
     // special_tokens (byte level only — the tiktoken contract): reserved
     // markers are atomic, never split or merged across
@@ -1291,7 +1285,9 @@ object BuiltinTransformations {
     // (graft.expr.OrderedAtScale, round 16)
     val withRid =
       if (parts.isEmpty)
-        graft.expr.OrderedAtScale.globalRunIds(df, valCol, ord, "__rle_id")
+        graft.expr.OrderedAtScale.applyFusedLevel(df, ord, desc = false,
+          runIds = Seq(graft.expr.OrderedAtScale.RunIdUnit(valCol, ord, desc = false,
+            outName = "__rle_id")))
       else {
         val ow = Window.partitionBy(parts.map(col): _*).orderBy(ord.map(col): _*)
         val chg = when(row_number().over(ow) === 1, lit(0L))
@@ -1338,13 +1334,14 @@ object BuiltinTransformations {
       .groupBy(col(reqStr(name, kw, "col")).as("value"))
       .agg(count(lit(1)).as("count"),
         min(struct(ord.map(col): _*)).as("__first_key"))
-    graft.expr.OrderedAtScale.applyGlobal(grouped, "first_seen",
-      graft.expr.OrderedAtScale.GlobalOrderedSpec(
-        Seq("__first_key"), desc = false,
-        w => row_number().over(w).cast("long"),
-        count(lit(1)),
-        sum,
-        (p, _, v) => coalesce(p, lit(0L)) + v))
+    val firstSeen = graft.expr.OrderedAtScale.GlobalOrderedSpec(
+      Seq("__first_key"), desc = false,
+      w => row_number().over(w).cast("long"),
+      count(lit(1)),
+      sum,
+      (p, _, v) => coalesce(p, lit(0L)) + v)
+    graft.expr.OrderedAtScale.applyFusedLevel(grouped, firstSeen.orderBy, firstSeen.desc,
+      ordSpecs = Seq("first_seen" -> firstSeen))
       .drop("__first_key")
   }
 

@@ -134,40 +134,52 @@ object Pipeline {
       "graft-side-sinks")
     sideSinks.start()
 
-    // 7. the transformation chain, reference stage order
-    //    (basic_pipeline.py:53-77)
-    val t = cfg.transformations
-    val transformed = valid
-      .transform(Transforms.normaliseStrCols)
-      .transform(Transforms.deduplicateRows(t.dedupeCols))
-      .transform(Transforms.unnestCols(t.unnestCols))
-      .transform(Transforms.filterRows(t.filterRules))
-      .transform(Transforms.fillNullsPerCol(t.fillMap))
-      .transform(Transforms.recastCols(t.recastMap))
-      .transform(Transforms.clipCols(t.clipMap))
-      .transform(Transforms.deriveNewCols(t.newColMap))
-      .transform(Transforms.renameCols(t.renameMap))
-      .transform(Transforms.nestCols(t.nestCols))
-      .transform(Transforms.dropCols(t.dropCols))
-      .transform(Transforms.pipeCustomTransformations(
-        // builtins first, caller's registry shadows by name — a YAML config
-        // alone can invoke fuzzy_dedup / quality_filter / decontaminate etc.
-        BuiltinTransformations.registryWith(io) ++ customFns, cfg.customTransformations))
-      .transform(Transforms.finalSelect(cfg.selectCols))
-      .transform(Transforms.standardiseColNames)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // Every exit joins the side thread first: a run that throws must not
+    // keep writing into its output tree, or persist caches after the
+    // CacheScope released them, once the exception has left runPipeline.
+    // A side error raised meanwhile rides along as suppressed.
+    val (transformed, cfgWithPlan) = try {
+      // 7. the transformation chain, reference stage order
+      //    (basic_pipeline.py:53-77)
+      val t = cfg.transformations
+      val transformed = valid
+        .transform(Transforms.normaliseStrCols)
+        .transform(Transforms.deduplicateRows(t.dedupeCols))
+        .transform(Transforms.unnestCols(t.unnestCols))
+        .transform(Transforms.filterRows(t.filterRules))
+        .transform(Transforms.fillNullsPerCol(t.fillMap))
+        .transform(Transforms.recastCols(t.recastMap))
+        .transform(Transforms.clipCols(t.clipMap))
+        .transform(Transforms.deriveNewCols(t.newColMap))
+        .transform(Transforms.renameCols(t.renameMap))
+        .transform(Transforms.nestCols(t.nestCols))
+        .transform(Transforms.dropCols(t.dropCols))
+        .transform(Transforms.pipeCustomTransformations(
+          // builtins first, caller's registry shadows by name — a YAML config
+          // alone can invoke fuzzy_dedup / quality_filter / decontaminate etc.
+          BuiltinTransformations.registryWith(io) ++ customFns, cfg.customTransformations))
+        .transform(Transforms.finalSelect(cfg.selectCols))
+        .transform(Transforms.standardiseColNames)
+        .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // 8. optimized-plan capture (basic_pipeline.py:79)
-    val plan = transformed.queryExecution.optimizedPlan.toString.linesIterator.toSeq
-    val cfgWithPlan = cfg.copy(pipelinePlan = plan)
+      // 8. optimized-plan capture (basic_pipeline.py:79)
+      val plan = transformed.queryExecution.optimizedPlan.toString.linesIterator.toSeq
+      val cfgWithPlan = cfg.copy(pipelinePlan = plan)
 
-    // 9. sinks: config YAML, transformed data, conditional error records,
-    //    post-transform describe (basic_pipeline.py:81-113)
-    io.writeText(
-      YamlEmit.emit(YamlEmit.configToMap(cfgWithPlan)),
-      s"$outRoot/${cfg.configDir}/config.yaml")
-    io.write(transformed, s"$outRoot/${cfg.transformedDataDir}", cfg.dstFileType,
-      options = cfg.dstOptions.toMap)
+      // 9. sinks: config YAML, transformed data, conditional error records,
+      //    post-transform describe (basic_pipeline.py:81-113)
+      io.writeText(
+        YamlEmit.emit(YamlEmit.configToMap(cfgWithPlan)),
+        s"$outRoot/${cfg.configDir}/config.yaml")
+      io.write(transformed, s"$outRoot/${cfg.transformedDataDir}", cfg.dstFileType,
+        options = cfg.dstOptions.toMap)
+      (transformed, cfgWithPlan)
+    } catch {
+      case t: Throwable =>
+        sideSinks.join()
+        sideErr.foreach(t.addSuppressed)
+        throw t
+    }
     // side sinks (describe-pre + conditional error records) must have
     // succeeded before the post-transform describe and the manifest: a
     // crashed side sink still fails the run before the manifest records

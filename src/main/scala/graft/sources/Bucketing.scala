@@ -50,8 +50,6 @@ object Bucketing {
     sorted.saveAsTable(table)
   }
 
-  def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
   /** Shuffle-free equi-join of two tables bucketed on the join keys with
     * matching bucket counts. */
   def cocolocatedJoin(

@@ -192,10 +192,7 @@ object Transforms {
       // shuffles). A row-wise entry — or any entry referencing a name a
       // pending batch will produce — flushes first so successors see its
       // columns.
-      def refs(c: Column): Set[String] =
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c).collect {
-          case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => u.name
-        }.toSet
+      import org.apache.spark.sql.graftbridge.ColumnBridge.{referencedNames => refs}
       // every input column a GlobalOrdered spec reads (combine is probed
       // with dummy placeholders, subtracted back out)
       def goRefs(spec: graft.expr.OrderedAtScale.GlobalOrderedSpec): Set[String] = {
@@ -233,10 +230,11 @@ object Transforms {
           }
         }
       // Chained decompositions re-analyze the whole accumulated tree and
-      // grow optimizer cost ~3× per level (measured via ChainProbe); a
-      // zero-copy plan barrier between levels keeps it linear. The FIRST
-      // decomposition never pays it, so single-decomposition plans keep
-      // their pushdown/plan-pin shape.
+      // grow optimizer cost ~3× per level; a zero-copy plan barrier
+      // between levels keeps it linear (OrderedAtScaleSpec pins that a
+      // 12-level chain's optimized plan stays within 2x of 6 levels). The
+      // FIRST decomposition never pays it, so single-decomposition plans
+      // keep their pushdown/plan-pin shape.
       var decomps = 0
       // Output names produced by entries processed so far — the
       // overwrite-hazard guard on base-frame sampling (round-19 advisory,

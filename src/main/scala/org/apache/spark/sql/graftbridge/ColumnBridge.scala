@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Column <-> Catalyst Expression interop for custom expressions.
   *
@@ -16,4 +17,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Names of the columns `c` reads. [[expression]] wraps a plain
+    * ColumnNode (`col`, `sum`, `+`, ...) in ONE opaque leaf, so a tree walk
+    * over its result finds nothing; this converts the whole node tree. */
+  def referencedNames(c: Column): Set[String] =
+    ColumnNodeToExpressionConverter(c.node).collect {
+      case u: UnresolvedAttribute => u.name
+    }.toSet
 }

@@ -235,13 +235,15 @@ class OrderedAtScaleSpec extends AnyFunSuite {
     assert(canon(gq) == canon(wq), "rolling_quantile_by: global != windowed")
   }
 
-  test("globalRollingBy: dense-axis tail valve is loud, not a silent drop") {
+  test("RollByGroup: dense-axis tail valve is loud, not a silent drop") {
     val df = spark.range(200)
       .select(lit(5L).as("ts"), col("id").as("uid"), col("id").as("v"))
     val e = intercept[Exception] {
-      OrderedAtScale.globalRollingBy(df.toDF(), "out", col("v"), "ts", 10L, "right",
-        w => sum(col("v")).over(w), OrderedAtScale.NoOwn, (t, _, v) => v,
-        maxTailRows = 16).collect()
+      OrderedAtScale.applyFusedLevel(df.toDF(), Seq("ts"), desc = false,
+        rollByGroups = Seq(OrderedAtScale.RollByGroup("ts", 10L, "right",
+          Seq(("out", col("v"), w => sum(col("v")).over(w), OrderedAtScale.NoOwn,
+            (t, _, v) => v)),
+          maxTailRows = 16))).collect()
     }
     assert(e.getMessage.contains("maxTailRows"), s"wrong error: ${e.getMessage}")
   }
@@ -264,11 +266,12 @@ class OrderedAtScaleSpec extends AnyFunSuite {
     assert(g.select(max(col("out"))).head().getLong(0) == 3L) // a, null, b, c
   }
 
-  test("globalRunIds desc flips the chain direction") {
+  test("RunIdUnit desc flips the chain direction") {
     val df = spark.range(100)
       .select(col("id").as("t"), (col("id") >= 50).cast("string").as("s"))
       .repartition(3)
-    val out = OrderedAtScale.globalRunIds(df, "s", Seq("t"), "rid", desc = true)
+    val out = OrderedAtScale.applyFusedLevel(df, Seq("t"), desc = true,
+        runIds = Seq(OrderedAtScale.RunIdUnit("s", Seq("t"), desc = true, outName = "rid")))
       .orderBy(col("t").desc).select("rid").as[Long].collect().toSeq
     assert(out == Seq.fill(50)(0L) ++ Seq.fill(50)(1L))
   }
@@ -361,16 +364,53 @@ class OrderedAtScaleSpec extends AnyFunSuite {
       graft.expr.ExprRegistry.rollingByFrame(
         Map("by" -> "t", "window_size" -> 5), "hypothetical_by_fn")
     }
-    assert(e2.getMessage.contains("globalRollingBy") && e2.getMessage.contains("registry bug"))
+    assert(e2.getMessage.contains("RollByGroup") && e2.getMessage.contains("registry bug"))
   }
 
-  test("buckets honor spark.graft.orderedBuckets; shadow-column collision is loud") {
-    spark.conf.set("spark.graft.orderedBuckets", "2")
-    try {
-      val out = derive("cs" -> DeriveSpec("cum_sum",
-        Map("col" -> "v", "order_by" -> Seq("t", "uid"))))(fixture(50))
-      assert(out.count() == 50)
-    } finally spark.conf.unset("spark.graft.orderedBuckets")
+  /** Lines in the optimized plan of `k` alternating-order entries over
+    * 1,000 rows: independent cum_sums of `v`, or (`chained`) cum_maxes
+    * that each read the previous entry's output (max keeps 12 nested
+    * levels inside long range). */
+  private def altChainPlanLines(k: Int, chained: Boolean): Int = {
+    val df = spark.range(1000).select(col("id").as("t"), (col("id") % 13).as("v"))
+    val specs = (1 to k).map { i =>
+      val ord = if (i % 2 == 0) Seq("t") else Seq("v", "t")
+      val src = if (chained && i > 1) s"a${i - 1}" else "v"
+      s"a$i" -> DeriveSpec(if (chained) "cum_max" else "cum_sum",
+        Map("col" -> src, "order_by" -> ord))
+    }
+    derive(specs: _*)(df).queryExecution.optimizedPlan.treeString.linesIterator.size
+  }
+
+  test("alternating-order cum_sum chain: 12 entries plan within 2x of 6 entries") {
+    // alternating orders defeat same-order batching; the plan must not
+    // compound with the entry count
+    val (six, twelve) = (altChainPlanLines(6, false), altChainPlanLines(12, false))
+    assert(twelve <= 2 * six, s"12-entry plan has $twelve lines vs $six for 6 entries")
+  }
+
+  test("dependent global entries: one level each, plan flat with depth") {
+    // each entry reads the previous one's output, so none may share a
+    // fused level with its source (the pool must see the dependency), and
+    // 12 levels deep the optimized plan must stay flat: every level
+    // re-roots its input on a frozen leaf
+    val (six, twelve) = (altChainPlanLines(6, true), altChainPlanLines(12, true))
+    assert(twelve <= 2 * six, s"12-level plan has $twelve lines vs $six for 6 levels")
+    val df = spark.range(200).select(col("id").as("t"), (col("id") % 13).as("v"))
+      .withColumn("one", lit(1))
+    val global = derive(
+      "a1" -> DeriveSpec("cum_sum", Map("col" -> "v", "order_by" -> Seq("v", "t"))),
+      "a2" -> DeriveSpec("cum_sum", Map("col" -> "a1", "order_by" -> Seq("t"))))(df)
+    val windowed = derive(
+      "a1" -> DeriveSpec("cum_sum",
+        Map("col" -> "v", "order_by" -> Seq("v", "t"), "partition_by" -> Seq("one"))),
+      "a2" -> DeriveSpec("cum_sum",
+        Map("col" -> "a1", "order_by" -> Seq("t"), "partition_by" -> Seq("one"))))(df)
+    def canon(d: DataFrame) = d.select("t", "a1", "a2").orderBy("t").collect().toSeq
+    assert(canon(global) == canon(windowed))
+  }
+
+  test("shadow-column collision is loud") {
     val bad = fixture(10).withColumn("__go_bucket", lit(1))
     val e = intercept[IllegalArgumentException] {
       derive("cs" -> DeriveSpec("cum_sum",

@@ -396,6 +396,43 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(badAction.getMessage.contains("filter") && badAction.getMessage.contains("flag"))
   }
 
+  test("a throwing custom transformation stops every write before runPipeline throws") {
+    // records each write's completion time; the desc_stats writes are
+    // slowed so the side-sink thread is surely still busy when the main
+    // thread's custom fn throws
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val io = new FakeIO() {
+      override def write(df: org.apache.spark.sql.DataFrame, path: String, fileType: String,
+          targetSizeGb: Double, options: Map[String, String]): Unit = {
+        if (path.contains("desc_stats")) Thread.sleep(1500)
+        super.write(df, path, fileType, targetSizeGb, options)
+        writes.add(path -> System.nanoTime())
+      }
+    }
+    io.frames.put("/src/raw.parquet", inputDf)
+    val cfg = GeneralConfig(processName = "p", srcPath = "/src/raw.parquet", dstRoot = "/out",
+      validation = Seq(RuleSpec("name_not_null", "name", "is_not_null")),
+      customTransformations = Seq("boom" -> Map.empty[String, Any]))
+    val boom: graft.stages.Transforms.CustomFn =
+      (_, _) => throw new IllegalStateException("boom")
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    def sideSinkThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName == "graft-side-sinks" && t.isAlive)
+    val e = intercept[IllegalStateException](
+      Pipeline.runPipeline(spark, cfg, io, Map("boom" -> boom)))
+    val thrownAt = System.nanoTime()
+    val aliveAfterThrow = sideSinkThreads.length
+    // let a leaked thread finish so its late writes and caches show below
+    sideSinkThreads.foreach(_.join(60000))
+    assert(e.getMessage == "boom")
+    assert(aliveAfterThrow == 0, "the side-sink thread outlived runPipeline's throw")
+    val leaked = sc.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"a failed run left persisted RDDs $leaked")
+    val late = writes.toArray(Array.empty[(String, Long)]).filter(_._2 > thrownAt).map(_._1)
+    assert(late.isEmpty, s"writes landed after the throw: ${late.toSeq}")
+  }
+
   test("S14 recast is strict (ANSI) even when the session disabled ANSI mode") {
     // reference core/transform.py:155-164: polars strict_cast RAISES on a
     // bad cast; a default-lax Spark session silently null-fills. runPipeline

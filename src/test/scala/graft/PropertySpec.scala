@@ -512,8 +512,6 @@ class PropertySpec extends AnyFunSuite {
         // quality_classifier train-then-apply shape)
         opt("num_merges", Gen.oneOf(1L, 2L), wrongForInt),
         opt("out_col", Gen.const("bpe_out"), wrongForStr),
-        opt("trainer", Gen.oneOf[Any]("local", "distributed"),
-          Gen.oneOf[Any](42L, true, junkMap, "bogus_trainer")),
         opt("mode", Gen.oneOf[Any]("count", "segments"),
           Gen.oneOf[Any](42L, true, junkMap, "bogus_mode"))),
       "unigram_tokenize" -> Seq(textCol,
