@@ -639,20 +639,22 @@ object ScaleRehearsal {
       .write.mode("overwrite").parquet(s"$outDir/events.parquet")
   }
 
-  /** CC round-latency rehearsal (round 18, judge item 7): a chain of
-    * N = |documents at Mx| nodes (edges i→i+1) has diameter N — the
-    * worst case for a driver-coordinated loop whose per-round cost is
-    * two fixed Spark actions (snapshot + changed-count) no matter how
-    * small the data. Rounds grow ~log(diameter) under pointer jumping,
-    * so the ladder isolates exactly the term the judge asked about: is
-    * wall time rounds-bound (fixed cost dominates) or data-bound? The
-    * per-run round count prints to stderr so BASELINE can quote it next
-    * to the times. */
+  /** CC round-latency rehearsal: a chain of N = |documents at Mx| nodes
+    * (edges i→i+1) has diameter N — the worst case for the distributed
+    * loop ([[graft.operators.Dedup.connectedComponentsLoop]]), whose
+    * per-round cost is two fixed Spark actions (snapshot + changed-count)
+    * no matter how small the data. The ladder calls the loop directly:
+    * the public `connectedComponents` labels every chain this size on the
+    * driver in 0 rounds, which would leave nothing to measure. Rounds grow
+    * ~log(diameter) under pointer jumping, so the ladder isolates one
+    * question: is wall time rounds-bound (fixed cost dominates) or
+    * data-bound? The per-run round count prints to stderr so BASELINE can
+    * quote it next to the times. */
   private def ccChainAtScale: (SparkSession, String) => DataFrame = (s, d) => {
     val n = s.read.parquet(s"$d/documents.parquet").count()
     val chain = s.range(n - 1)
       .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val (labels, rounds) = graft.operators.Dedup.connectedComponentsStats(
+    val (labels, rounds) = graft.operators.Dedup.connectedComponentsLoop(
       chain, "id_a", "id_b", maxIters = 64)
     System.err.println(s"[ladder] cc_chain n=$n rounds=$rounds")
     labels.agg(count(lit(1)).as("n_nodes"),

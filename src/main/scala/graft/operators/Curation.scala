@@ -562,8 +562,8 @@ object Curation {
     * is persisted and feeds both the store probe and the in-batch pair
     * join — release via [[graft.util.CacheScope.withPersisted]] like the
     * other dedup frames); the store is probed with one left-semi
-    * equi-join on (band, digest) and never collected, and the CC loop
-    * runs on the fresh subset's pair graph only. */
+    * equi-join on (band, digest) and never collected, and connected
+    * components run on the fresh subset's pair graph only. */
   def novelAgainstFuzzy(
       batch: DataFrame,
       seenDigests: DataFrame,

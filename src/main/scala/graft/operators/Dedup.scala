@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions._
   * joins/aggregations on SHORT keys (32-char digests, band hashes, bucket
   * ids) — never an all-pairs comparison over the corpus. At 100 TB the only
   * all-pairs work happens WITHIN an LSH bucket/band, whose size is
-  * controlled by the banding parameters.
+  * controlled by the banding parameters. The one driver-side step is
+  * clustering: [[connectedComponents]] collects a pair graph of up to
+  * [[DriverEdges]] edges once and labels it with union-find; only a
+  * larger graph runs the distributed label-propagation loop.
   *
   * Determinism: all hashing is md5-based (not `hash()`/`xxhash64`-seeded
   * randomness), so results are reproducible across runs, engines, and the
@@ -362,47 +365,131 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Connected components over an undirected pair list by iterative
-    * min-label propagation — the cluster step of near-dup dedup (every doc
-    * in a component shares the component's minimum id as its cluster).
+  /** Pair-graph size up to which [[connectedComponentsStats]] labels on
+    * the driver. Collecting and labeling holds about 280 bytes of driver
+    * heap per edge at its widest point (long ids; BASELINE.md), ~290 MB
+    * at this bound; a near-dup pair graph is a tiny fraction of its
+    * corpus, so only corpora with millions of near-dup pairs go past it. */
+  private[graft] val DriverEdges: Int = 1 << 20
+
+  /** Connected components over an undirected pair list — the cluster step
+    * of near-dup dedup: every node appearing in `edges` gets its
+    * component's minimum id (Spark's `min` for the id type) as its label.
+    * Null endpoints are not edges and are dropped.
     *
-    * Scale shape: each iteration is one equi-join + one min-aggregation —
-    * all hash-partitioned on node id, no driver-side graph. Converges in
-    * O(component diameter) iterations (near-dup clusters are shallow);
-    * the driver loop only checks a changed-count, never collects labels.
-    * The same algorithm GraphX's connectedComponents runs, on DataFrames.
+    * Scale shape: the edge list is collected with ONE bounded collect.
+    * When it holds at most [[DriverEdges]] edges (every near-dup pair
+    * graph the catalog and pipeline build), union-find labels it on the
+    * driver and the result is a local frame — no per-round Spark jobs.
+    * Only a larger graph runs [[connectedComponentsLoop]], the
+    * distributed label-propagation loop; the edge frame is persisted
+    * across the probe so that path does not rebuild the pairs. Both paths
+    * give identical labels.
+    */
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    connectedComponentsStats(edges, srcCol, dstCol)._1
+
+  /** [[connectedComponents]] plus the number of distributed rounds it took:
+    * 0 when the graph was labeled on the driver. */
+  def connectedComponentsStats(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String
+  ): (DataFrame, Int) = {
+    val pairs = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+    // the loop's self-union widens mismatched endpoint types; label in
+    // that same type
+    val t = pairs.union(pairs.select(col("b"), col("a"))).schema("a").dataType
+    val typed = pairs.select(col("a").cast(t).as("a"), col("b").cast(t).as("b"))
+    // persisted as an RDD, not a cached frame: the probe's job fills the
+    // cache as it scans, where a cached frame runs a cache-building job of
+    // its own first. The loop path then reads the cache, not the pair build.
+    val fwdRows = typed.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val fwd = edges.sparkSession.createDataFrame(fwdRows, typed.schema)
+      val probe = fwd.limit(DriverEdges + 1).collect()
+      if (probe.length <= DriverEdges) (driverLabels(edges.sparkSession, probe, t), 0)
+      else connectedComponentsLoop(fwd, "a", "b")
+    } finally fwdRows.unpersist(blocking = false)
+  }
+
+  /** Union-find over a collected edge list. Node order is Catalyst's
+    * ordering for `t` on internal values (a String id orders by its UTF-8
+    * bytes, not by Java's UTF-16 `compareTo`), so each label is exactly the
+    * `min` [[connectedComponentsLoop]] reaches. Nodes are ranked in that
+    * order and every union keeps the smaller rank as root, so a root is
+    * its component's minimum. Rows come out in node order. */
+  private def driverLabels(
+      spark: org.apache.spark.sql.SparkSession,
+      edges: Array[org.apache.spark.sql.Row],
+      t: org.apache.spark.sql.types.DataType
+  ): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(t)
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(t)
+    // endpoint 2e / 2e+1 = edge e's source / destination
+    val ends = new Array[Any](2 * edges.length)
+    edges.indices.foreach { e => ends(2 * e) = edges(e).get(0); ends(2 * e + 1) = edges(e).get(1) }
+    val keys = ends.map(toCatalyst)
+    val rank = new Array[Int](ends.length)
+    val firstOfRank = scala.collection.mutable.ArrayBuffer.empty[Int]
+    Array.range(0, ends.length).sortBy(keys(_))(ord).foreach { i =>
+      if (firstOfRank.isEmpty || ord.compare(keys(firstOfRank.last), keys(i)) != 0)
+        firstOfRank += i
+      rank(i) = firstOfRank.length - 1
+    }
+    val parent = Array.range(0, firstOfRank.length)
+    def find(x: Int): Int = {
+      var v = x
+      while (parent(v) != v) { parent(v) = parent(parent(v)); v = parent(v) }
+      v
+    }
+    edges.indices.foreach { e =>
+      val ra = find(rank(2 * e))
+      val rb = find(rank(2 * e + 1))
+      if (ra < rb) parent(rb) = ra else parent(ra) = rb
+    }
+    val rows = firstOfRank.indices.map { r =>
+      org.apache.spark.sql.Row(ends(firstOfRank(r)), ends(firstOfRank(find(r))))
+    }
+    spark.createDataFrame(rows.asJava,
+      StructType(Seq(StructField("node", t, nullable = false), StructField("label", t))))
+  }
+
+  /** The distributed form of [[connectedComponents]]: iterative min-label
+    * propagation with pointer jumping, for pair graphs over
+    * [[DriverEdges]]. The same algorithm GraphX's connectedComponents
+    * runs, on DataFrames. Each round is one equi-join + one
+    * min-aggregation + one pointer-jump self-join, all hash-partitioned on
+    * node id, then a snapshot job and a changed-count job; it converges in
+    * O(log component diameter) rounds.
     *
     * Throws IllegalStateException if labels have not stabilized after
     * `maxIters` — a silent partial result would split real clusters.
-    * The returned frame is eagerly local-checkpointed (tiny: one row per
-    * node appearing in `edges`); its blocks free when the frame is GC'd.
-    */
-  /** @param checkpointDir when set, per-round snapshots use RELIABLE
+    * The returned frame is eagerly checkpointed (one row per node
+    * appearing in `edges`); with a local checkpoint its blocks free when
+    * the frame is GC'd.
+    *
+    * @param checkpointDir when set, per-round snapshots use RELIABLE
     *   checkpoints written under this directory (HDFS/object store on a
     *   cluster) instead of `localCheckpoint`: local checkpoint blocks live
     *   on executors, so one lost executor kills the whole iterative job at
     *   the round it died in; reliable checkpoints survive executor loss at
     *   the cost of a filesystem write per round. Local remains the default
     *   for single-machine / test runs. The context's previous checkpoint
-    *   dir is restored on exit (setCheckpointDir is session-global), and
-    *   each superseded round's checkpoint FILES are deleted as soon as the
-    *   next round has consumed them — Spark never cleans reliable
+    *   dir is restored on every exit (setCheckpointDir is session-global),
+    *   and each superseded round's checkpoint FILES are deleted as soon as
+    *   the next round has consumed them — Spark never cleans reliable
     *   checkpoints itself, so an unbounded loop would otherwise grow the
     *   store without limit. Only the FINAL labels' checkpoint survives (the
     *   returned frame reads from it); it lives under `checkpointDir`, which
-    *   the caller owns and can remove once done with the result. */
-  def connectedComponents(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      maxIters: Int = 20,
-      checkpointDir: Option[String] = None
-  ): DataFrame =
-    connectedComponentsStats(edges, srcCol, dstCol, maxIters, checkpointDir)._1
-
-  /** [[connectedComponents]] plus the DRIVER ROUND COUNT it took to
-    * converge — the observable the round-latency ladder measures. */
-  def connectedComponentsStats(
+    *   the caller owns and can remove once done with the result. If a round
+    *   throws, the persisted edges and the last round's snapshot are
+    *   released before the exception leaves. */
+  private[graft] def connectedComponentsLoop(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
@@ -411,85 +498,100 @@ object Dedup {
   ): (DataFrame, Int) = {
     import org.apache.spark.storage.StorageLevel
     val sc = edges.sparkSession.sparkContext
-    val prevCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
     def deleteCheckpointFiles(rdd: org.apache.spark.rdd.RDD[_]): Unit =
       rdd.getCheckpointFile.foreach { f =>
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
       }
-    // null endpoints are meaningless edges — exclude them explicitly
-    // (they would otherwise silently vanish in the pointer-jump join)
-    val fwd = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-    val sym = fwd.union(fwd.select(col("b"), col("a")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Iterative frames are EAGERLY snapshotted each round: persist() alone
-    // leaves the growing join lineage inside every new plan and each round
-    // partially recomputes it — measured 40s for a 3-round loop at sf0.1
-    // vs ~4s snapshotted. localCheckpoint is not enough on its own: it
-    // carries the origin plan's constraints (with stale attribute ids)
-    // into the next round's self-union and trips constraint rewriting, so
-    // the plan is fully severed via createDataFrame over the checkpointed
-    // RDD. With `checkpointDir` set the snapshot is a reliable checkpoint
-    // instead — same shape, survives executor loss.
-    def snapshot(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val cp = if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-      val rdd = cp.rdd
-      (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+    org.apache.spark.sql.graftbridge.CheckpointDirs.withCheckpointDir(sc, checkpointDir) {
+      // null endpoints are meaningless edges — exclude them explicitly
+      // (they would otherwise silently vanish in the pointer-jump join)
+      val fwd = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+        .filter(col("a").isNotNull && col("b").isNotNull)
+      val sym = fwd.union(fwd.select(col("b"), col("a")))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // Iterative frames are EAGERLY snapshotted each round: persist() alone
+      // leaves the growing join lineage inside every new plan and each round
+      // partially recomputes it — measured 40s for a 3-round loop at sf0.1
+      // vs ~4s snapshotted. localCheckpoint is not enough on its own: it
+      // carries the origin plan's constraints (with stale attribute ids)
+      // into the next round's self-union and trips constraint rewriting, so
+      // the plan is fully severed via createDataFrame over the checkpointed
+      // RDD. With `checkpointDir` set the snapshot is a reliable checkpoint
+      // instead — same shape, survives executor loss. The second value is
+      // the checkpointed RDD itself (under the frame's LogicalRDD), the one
+      // whose blocks and files a release must target: `cp.rdd` is a fresh
+      // deserializing child that holds neither.
+      def snapshot(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
+        val cp = if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+        val checkpointed = cp.queryExecution.logical.collectFirst {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+        }.get
+        (df.sparkSession.createDataFrame(cp.rdd, df.schema), checkpointed)
+      }
+      var labelsRdd: org.apache.spark.rdd.RDD[_] = null
+      var returned = false
+      try {
+        val (labels0, rdd0) = snapshot(
+          sym.select(col("a").as("node")).distinct().withColumn("label", col("node")))
+        var labels = labels0
+        labelsRdd = rdd0
+        var converged = false
+        var i = 0
+        while (!converged && i < maxIters) {
+          // each node proposes min(own label, neighbors' labels) ...
+          // re-alias (fresh exprIds): unioning a checkpointed frame with a
+          // derivation of itself otherwise shares attribute ids across union
+          // children and trips constraint rewriting
+          val viaNeighbors = sym
+            .join(labels.withColumnRenamed("node", "b"), "b")
+            .select(col("a").as("node"), col("label").as("label"))
+          val minNeighbor = labels.unionByName(viaNeighbors)
+            .groupBy("node").agg(min("label").as("label"))
+          // ... then POINTER-JUMPS to its label's own label: every label is a
+          // node id, so one extra self-join doubles the propagation distance
+          // per round — O(log diameter) rounds instead of O(diameter), which
+          // is what bounds the driver loop (each round is a full Spark job).
+          val jumped = minNeighbor.as("x")
+            .join(minNeighbor.select(col("node").as("label"), col("label").as("jumped")),
+              Seq("label"))
+            .select(col("node"), col("jumped").as("label"))
+          val (next, nextRdd) = snapshot(jumped)
+          // Round-19 negative result, measured so it stays un-retried:
+          // carrying each node's previous label THROUGH the round (union
+          // branch + pointer-jump self-join + checkpoint) to replace this join with a
+          // plain filter over the snapshot read 10-19% SLOWER on q77/q123/
+          // q124 at sf0.1 — the extra column rides every corpus-of-nodes row
+          // through the round's heaviest operators to save one tiny-graph
+          // join. On a real cluster the saved per-round job latency may win;
+          // locally it does not, and the bench is the arbiter here.
+          val changed = next.join(labels.withColumnRenamed("label", "old"), "node")
+            .filter(col("label") < col("old")).count()
+          // the superseded round's checkpoint blocks AND files are dead once
+          // `changed` has consumed them — free deterministically, don't wait
+          // for GC (reliable checkpoint files are never cleaned by Spark)
+          labelsRdd.unpersist(blocking = false)
+          deleteCheckpointFiles(labelsRdd)
+          labels = next
+          labelsRdd = nextRdd
+          converged = changed == 0
+          i += 1
+        }
+        if (!converged)
+          throw new IllegalStateException(
+            s"connectedComponents: labels not stable after $maxIters iterations " +
+              "(a component's diameter exceeds maxIters) — raise maxIters")
+        returned = true
+        (labels, i)
+      } finally {
+        sym.unpersist()
+        if (!returned && labelsRdd != null) {
+          labelsRdd.unpersist(blocking = false)
+          deleteCheckpointFiles(labelsRdd)
+        }
+      }
     }
-    var (labels, labelsRdd) = snapshot(
-      sym.select(col("a").as("node")).distinct().withColumn("label", col("node")))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      // each node proposes min(own label, neighbors' labels) ...
-      // re-alias (fresh exprIds): unioning a checkpointed frame with a
-      // derivation of itself otherwise shares attribute ids across union
-      // children and trips constraint rewriting
-      val viaNeighbors = sym
-        .join(labels.withColumnRenamed("node", "b"), "b")
-        .select(col("a").as("node"), col("label").as("label"))
-      val minNeighbor = labels.unionByName(viaNeighbors)
-        .groupBy("node").agg(min("label").as("label"))
-      // ... then POINTER-JUMPS to its label's own label: every label is a
-      // node id, so one extra self-join doubles the propagation distance
-      // per round — O(log diameter) rounds instead of O(diameter), which
-      // is what bounds the driver loop (each round is a full Spark job).
-      val jumped = minNeighbor.as("x")
-        .join(minNeighbor.select(col("node").as("label"), col("label").as("jumped")),
-          Seq("label"))
-        .select(col("node"), col("jumped").as("label"))
-      val (next, nextRdd) = snapshot(jumped)
-      // Round-19 negative result, measured so it stays un-retried:
-      // carrying each node's previous label THROUGH the round (union
-      // branch + pointer-jump self-join + checkpoint) to replace this join with a
-      // plain filter over the snapshot read 10-19% SLOWER on q77/q123/
-      // q124 at sf0.1 — the extra column rides every corpus-of-nodes row
-      // through the round's heaviest operators to save one tiny-graph
-      // join. On a real cluster the saved per-round job latency may win;
-      // locally it does not, and the bench is the arbiter here.
-      val changed = next.join(labels.withColumnRenamed("label", "old"), "node")
-        .filter(col("label") < col("old")).count()
-      // the superseded round's checkpoint blocks AND files are dead once
-      // `changed` has consumed them — free deterministically, don't wait
-      // for GC (reliable checkpoint files are never cleaned by Spark)
-      labelsRdd.unpersist(blocking = false)
-      deleteCheckpointFiles(labelsRdd)
-      labels = next
-      labelsRdd = nextRdd
-      converged = changed == 0
-      i += 1
-    }
-    sym.unpersist()
-    // restore the session-global checkpoint dir we overrode
-    if (checkpointDir.isDefined) prevCheckpointDir.foreach(sc.setCheckpointDir)
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents: labels not stable after $maxIters iterations " +
-          "(a component's diameter exceeds maxIters) — raise maxIters")
-    (labels, i)
   }
 
   /** End-to-end fuzzy dedup: MinHash-LSH candidate pairs -> connected
@@ -499,9 +601,11 @@ object Dedup {
     * drop (q63's apply step) removes `id_b` of every pair, which
     * over-removes on chains (a~b, b~c drops both b and c even though c
     * only resembles b); clustering first keeps precisely one exemplar per
-    * transitive group. Cost: the CC label-propagation loop on the PAIR
-    * GRAPH only (near-dup pairs are a tiny fraction of the corpus), then
-    * one anti-join back to the full corpus. */
+    * transitive group. Cost: the LSH pair build, then clustering of the
+    * PAIR GRAPH only (near-dup pairs are a tiny fraction of the corpus) —
+    * one bounded collect and driver-side union-find up to
+    * [[DriverEdges]] pairs, the distributed CC loop beyond — then one
+    * anti-join back to the full corpus. */
   def fuzzyDedup(
       df: DataFrame,
       idCol: String,

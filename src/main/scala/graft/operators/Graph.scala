@@ -18,7 +18,7 @@ import org.apache.spark.storage.StorageLevel
   * and reused by every round. Deep chains are lineage-bounded by
   * `checkpointEvery`: every that-many rounds the iterate is eagerly
   * snapshotted (localCheckpoint + plan sever — the
-  * [[Dedup.connectedComponents]] pattern), so iters ~ 20+ no longer
+  * [[Dedup.connectedComponentsLoop]] pattern), so iters ~ 20+ no longer
   * explodes analysis/codegen depth; at the default depths no snapshot
   * fires and the whole plan stays ONE Spark job. The FINAL iterate is
   * always snapshotted, which lets both operators unpersist their cached
@@ -45,7 +45,7 @@ object Graph {
   /** Eager lineage sever: localCheckpoint then rebuild over the
     * checkpointed RDD (localCheckpoint alone carries the origin plan's
     * constraints with stale attribute ids — the
-    * [[Dedup.connectedComponents]] lesson). Returns the severed frame and
+    * [[Dedup.connectedComponentsLoop]] lesson). Returns the severed frame and
     * its RDD so superseded snapshots can be unpersisted deterministically. */
   private def snapshot(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
     val rdd = df.localCheckpoint(true).rdd

@@ -1847,9 +1847,10 @@ object Queries {
       |FROM events WHERE event_type = 'purchase' GROUP BY user_id""".stripMargin
 
   /** Near-dup CLUSTERING: connected components over the MinHash LSH pair
-    * graph by iterative min-label propagation — every member of a
-    * component gets the component's minimum doc_id as its cluster. The
-    * oracle computes the same closure with a recursive CTE. */
+    * graph ([[Dedup.connectedComponents]]: driver-side union-find for a
+    * bounded graph) — every member of a component gets the component's
+    * minimum doc_id as its cluster. The oracle computes the same closure
+    * with a recursive CTE. */
   val q77: QueryFn = (s, d) => {
     val pairs = Dedup.minHashLshPairs(tbl(s, d, "documents"), "doc_id", "text",
       shingleK = 3, numHashes = 8, bands = 4)

@@ -1268,14 +1268,17 @@ class OperatorsSpec extends AnyFunSuite {
   test("connectedComponents: a 200-node chain is one component; mixed graph labels") {
     import graft.operators.Dedup
     // a 200-node chain: diameter-stressed, the worst case for the
-    // pointer-jumping driver loop
+    // pointer-jumping distributed loop
     val chain = spark.range(199)
       .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val m1 = Dedup.connectedComponentsStats(chain, "id_a", "id_b", maxIters = 64)._1
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Dedup.connectedComponentsLoop(chain, "id_a", "id_b", maxIters = 64)._1
+    // every superseded round's snapshot is released: only the result's stays
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size == 1)
+    val m1 = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m1.size == 200 && m1.values.toSet == Set(0L), "one chain, one component, min id 0")
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 9L), (5L, 6L)).toDF("id_a", "id_b")
-    val labels = Dedup.connectedComponents(edges, "id_a", "id_b")
+    val labels = Dedup.connectedComponentsLoop(edges, "id_a", "id_b")._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
   }
@@ -1285,17 +1288,80 @@ class OperatorsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
     try {
       val edges = Seq((2L, 1L), (2L, 3L), (3L, 9L), (5L, 6L)).toDF("id_a", "id_b")
-      val labels = Dedup.connectedComponents(edges, "id_a", "id_b",
-          checkpointDir = Some(dir))
+      val labels = Dedup.connectedComponentsLoop(edges, "id_a", "id_b",
+          checkpointDir = Some(dir))._1
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
-      // checkpoint data actually landed in the reliable dir
+      // checkpoint data actually landed in the reliable dir, and every
+      // superseded round's files were deleted: only the result's RDD remains
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0, "reliable checkpoint must write files")
+      val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(_.getFileName.toString.startsWith("rdd-")).count()
+      assert(rddDirs == 1, s"$rddDirs checkpointed RDDs left on disk")
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
+  }
+
+  test("connectedComponentsLoop: a throwing round restores the checkpoint dir, leaks no cache") {
+    import graft.operators.Dedup
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_cc_throw").toString
+    val prevAnsi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val prevDir = sc.getCheckpointDir
+      val before = sc.getPersistentRDDs.keySet
+      // the ANSI cast of "x" fails when the loop's first job evaluates the edges
+      val edges = spark.range(4).select(
+        when(col("id") === 3, lit("x")).otherwise(col("id").cast("string"))
+          .cast("long").as("id_a"),
+        (col("id") + 1).as("id_b"))
+      intercept[Exception](
+        Dedup.connectedComponentsLoop(edges, "id_a", "id_b", checkpointDir = Some(dir)))
+      assert(sc.getCheckpointDir == prevDir, "the caller's checkpoint dir outlived the throw")
+      val leaked = sc.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"persisted RDDs left behind by the throw: $leaked")
+    } finally {
+      spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("fuzzyDedup's build launches no more jobs than collecting its LSH pairs") {
+    import graft.operators.Dedup
+    import graft.util.CacheScope
+    val sc = spark.sparkContext
+    // 12 docs: six distinct sentences, each with a one-word near-dup
+    val base = Seq(
+      "the quick brown fox jumps over the lazy dog tonight",
+      "pack my box with five dozen brown liquor jugs right now",
+      "sphinx of black quartz judge my vow for the evening run",
+      "completely different content about spark engines and shuffles",
+      "how vexingly quick daft zebras jump across the wide river",
+      "a wizard's job is to vex chumps quickly in the fog at dawn")
+    val rows = base.zipWithIndex.flatMap { case (t, i) =>
+      Seq((2L * i, t), (2L * i + 1, t.replaceFirst("\\w+$", "again")))
+    }
+    // each run reads a fresh RDD, so neither can reuse the other's cached frames
+    def corpus() = spark.createDataFrame(sc.parallelize(rows, 2)).toDF("doc_id", "text")
+    def jobsOf(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try CacheScope.withPersisted(spark)(body)
+      finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val build = jobsOf("fuzzy-dedup-build")(Dedup.fuzzyDedup(corpus(), "doc_id", "text", 3, 8, 4))
+    var nPairs = 0
+    val pairs = jobsOf("lsh-pairs-collect") {
+      nPairs = Dedup.minHashLshPairs(corpus(), "doc_id", "text", 3, 8, 4).collect().length
+    }
+    assert(nPairs > 0, "the planted near-dups must pair")
+    assert(pairs > 0 && build <= pairs,
+      s"fuzzyDedup build ran $build jobs, the pair collect alone $pairs")
   }
 
   test("ivfTopK nProbe=2 recovers the neighbor just across the cell boundary") {

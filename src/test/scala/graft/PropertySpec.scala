@@ -126,9 +126,12 @@ class PropertySpec extends AnyFunSuite {
     } yield (math.min(a, b), math.max(a, b))
     val graph = Gen.chooseNum(1, 14).flatMap(n => Gen.listOfN(n, edge)).map(_.distinct)
     val prop = Prop.forAll(graph) { edges =>
-      val labels = Dedup.connectedComponents(
-        edges.toDF("id_a", "id_b"), "id_a", "id_b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val df = edges.toDF("id_a", "id_b")
+      def labelsOf(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // the public driver path and the distributed loop, same oracle
+      val driver = labelsOf(Dedup.connectedComponents(df, "id_a", "id_b"))
+      val loop = labelsOf(Dedup.connectedComponentsLoop(df, "id_a", "id_b")._1)
       // oracle: plain union-find over the same edges
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
@@ -141,9 +144,23 @@ class PropertySpec extends AnyFunSuite {
       }
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
       val expected = nodes.map(n => n -> find(n)).toMap
-      labels == expected
+      driver == expected && loop == expected
     }
     check(prop, 6)
+  }
+
+  test("connectedComponents string labels follow Spark's UTF-8 order, not UTF-16") {
+    // Java's compareTo orders the surrogate pair (0xD83D) before U+FFFF;
+    // Spark compares UTF-8 bytes (F0 9F.. after EF BF..), so its min is U+FFFF
+    val (emoji, maxBmp) = ("\uD83D\uDE00", "\uFFFF")
+    assert(emoji.compareTo(maxBmp) < 0)
+    val df = Seq((emoji, maxBmp), ("b", "c")).toDF("id_a", "id_b")
+    val sparkMin = Seq(emoji, maxBmp).toDF("s").agg(min("s")).head().getString(0)
+    assert(sparkMin == maxBmp)
+    val expected = Map(emoji -> maxBmp, maxBmp -> maxBmp, "b" -> "b", "c" -> "b")
+    for (out <- Seq(Dedup.connectedComponents(df, "id_a", "id_b"),
+        Dedup.connectedComponentsLoop(df, "id_a", "id_b")._1))
+      assert(out.collect().map(r => r.getString(0) -> r.getString(1)).toMap == expected)
   }
 
   // ------------------------------------------------------- TimeSeries
